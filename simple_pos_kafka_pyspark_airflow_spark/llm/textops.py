@@ -1369,7 +1369,9 @@ def extract_html_text_rows(
     calling — fine in a single consumer chain, where the nondeterminism
     never crosses plan branches; see q_crawl_e2e). Returns
     ``id_cols + (text, n_lines, n_kept)``, one row per input row —
-    ``split`` always yields at least one line, so no row ever drops."""
+    ``split`` always yields at least one line, and a NULL ``html`` keeps
+    its row through ``posexplode_outer`` with ``(NULL, NULL, NULL)`` —
+    the Column form's answer — so no row ever drops."""
     if not id_cols:
         raise ValueError("id_cols must uniquely key the rows")
     frac = Fraction(str(max_link_density)).limit_denominator(10**9)
@@ -1377,13 +1379,15 @@ def extract_html_text_rows(
     keys = list(id_cols)
     lines = df.select(
         *keys,
-        F.posexplode(_html_lines(html)).alias("__pos", "__x"),
+        F.posexplode_outer(_html_lines(html)).alias("__pos", "__x"),
     )
     vis, keep = _html_line_scored(F.col("__x"), min_words, tn, td)
     scored = lines.select(*keys, "__pos", vis.alias("__t"), keep.alias("__k"))
     nonempty = F.col("__t") != ""
+    # a NULL html explodes to one all-NULL line: every output is NULL
+    has_html = F.count("__pos") > 0
     return scored.groupBy(*keys).agg(
-        F.array_join(
+        F.when(has_html, F.array_join(
             F.transform(
                 F.filter(
                     F.array_sort(
@@ -1396,9 +1400,9 @@ def extract_html_text_rows(
                 lambda s: s["__t"],
             ),
             "\n",
-        ).alias("text"),
-        F.sum(nonempty.cast("long")).cast("long").alias("n_lines"),
-        F.sum((nonempty & F.col("__k")).cast("long")).cast("long").alias("n_kept"),
+        )).alias("text"),
+        F.when(has_html, F.sum(nonempty.cast("long"))).alias("n_lines"),
+        F.when(has_html, F.sum((nonempty & F.col("__k")).cast("long"))).alias("n_kept"),
     )
 
 

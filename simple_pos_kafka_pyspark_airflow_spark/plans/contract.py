@@ -255,14 +255,10 @@ def certification_state(reg: dict[str, ContractQuery] | None = None) -> dict[str
 def driver_ordered_registry() -> dict[str, ContractQuery]:
     """Registry ordered for the driver's 50-query verification window.
 
-    The ordering depends on the certification ledger (itself synced from
-    repo-root ``CORRECTNESS_r*.json`` artifacts) read at call time —
-    deliberate (it makes the window rotation self-maintaining across
-    rounds) but a hidden input, so it is made visible and escapable: a log
-    line reports how many queries the ledger rotated behind the window,
-    and ``SPARK_GRAFT_STABLE_ORDER=1`` disables the disk-derived component
-    entirely (pure registration order), for deployments that need a
-    reproducible ``queries()`` ordering independent of checkout state.
+    The ordering depends only on tracked files: the registry and the
+    certification ledger.  Reading it never writes — new
+    ``CORRECTNESS_r*.json`` rounds enter the ledger through the ``sync``
+    CLI below, so ``queries()`` is reproducible from the checkout.
 
     Priority groups:
       0. uncertified oracle-checked LLM-pipeline queries (dedup ladder,
@@ -288,19 +284,7 @@ def driver_ordered_registry() -> dict[str, ContractQuery]:
     """
     reg = load_registry()
     index = {name: i for i, name in enumerate(reg)}
-    if os.environ.get("SPARK_GRAFT_STABLE_ORDER") == "1":
-        return reg
-    sync_certifications(reg)
     certified = certification_state(reg)
-    if certified:
-        import logging
-
-        logging.getLogger(__name__).info(
-            "driver_ordered_registry: certification ledger rotates %d "
-            "certified queries behind the verification window "
-            "(SPARK_GRAFT_STABLE_ORDER=1 disables)",
-            len(set(certified) & set(reg)),
-        )
 
     def group(name: str, cq: ContractQuery) -> int:
         if name in certified:

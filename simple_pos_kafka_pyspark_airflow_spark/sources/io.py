@@ -165,29 +165,30 @@ def staging_sibling(path: str) -> str:
     return f"{path.rstrip('/')}.__staging__{uuid.uuid4().hex[:8]}"
 
 
-def overwrite_atomic(df: DataFrame, path: str) -> None:
+def overwrite_atomic(df: DataFrame, path: str, partition_by: tuple[str, ...] = ()) -> None:
     """Full-snapshot overwrite with the same crash discipline as
     ``streaming.cdc.ParquetCdcSink``: write to staging, tombstone-rename the
     live dir, move staging in, drop the tombstone. Readers never observe a
     half-written table; a crash leaves either the old or the new snapshot
     (plus at worst a tombstone the next writer reclaims). All directory
     surgery goes through the Hadoop FileSystem of the path's own scheme
-    (``fs_swap_in``) — local paths, ``file:`` URIs, HDFS and ABFS alike."""
+    (``fs_swap_in``) — local paths, ``file:`` URIs, HDFS and ABFS alike.
+    ``partition_by`` keeps a partitioned table's directory layout."""
     spark = df.sparkSession
     staging = staging_sibling(path)
-    write_staged(df, staging)
+    write_staged(df, staging, partition_by)
     fs_recover_tombstone(spark, path)
     fs_swap_in(spark, staging, path)
 
 
-def write_staged(df: DataFrame, staging: str) -> None:
+def write_staged(df: DataFrame, staging: str, partition_by: tuple[str, ...] = ()) -> None:
     """Write a staging snapshot, deleting the half-written directory if
     the write itself fails — otherwise every failed attempt leaks a
     uuid-named ``.__staging__*`` sibling next to the live table that no
     recovery path would ever reclaim (a flaky nightly job accretes them
     without bound)."""
     try:
-        df.write.mode("overwrite").parquet(staging)
+        df.write.mode("overwrite").partitionBy(*partition_by).parquet(staging)
     except Exception:
         fs, p = _fs_for(df.sparkSession, staging)
         if fs.exists(p):

@@ -15,12 +15,16 @@ daily file partitioning (``:82-83``) and the hourly mtime micro-batch
 - ``corpus``  : LLM corpus ingest — quality gate, bounded exact dedup,
                 incremental near-dup / span indexes (extension)
 - ``ann``     : ingest-time incremental IVF similarity index (extension)
+- ``indexlog``: the replay-safe append log under every persistent index
+                of ``corpus`` and ``ann``
 
 Late data, which the reference silently mishandles (T8: the mtime window can
 miss or double-process files), is handled with watermarks + idempotent
 merges — a deliberate semantic upgrade documented in SURVEY.md §2.9.
 """
 
-from . import ann, cdc, corpus, ingest, joins, pipeline, state, windows
+from . import ann, cdc, corpus, indexlog, ingest, joins, pipeline, state, windows
 
-__all__ = ["ann", "cdc", "corpus", "ingest", "joins", "pipeline", "state", "windows"]
+__all__ = [
+    "ann", "cdc", "corpus", "indexlog", "ingest", "joins", "pipeline", "state", "windows"
+]

@@ -33,13 +33,11 @@ as ``IncrementalMinhashIndex`` does for text near-dup state:
   returns exactly the brute-force answer as long as the true top-k
   survives the candidate cut.
 
-Crash/replay: the per-batch append is plain parquet, so a replayed
-``foreachBatch`` batch lands its rows twice. Duplicate rows cannot
-change probe RESULTS (probes dedup on the vector id before scoring, and
-a vector's replicated rows carry the identical embedding) — they only
-grow the index; ``compact()`` rewrites it deduplicated per (id, cell)
-under the same atomic swap. Back the index with a transactional table
-format in production if replays are frequent.
+Storage, replay and compaction: the index rows are an
+``streaming.indexlog.IndexLog`` set log keyed (id, cell), partitioned by
+cell. Replayed rows cannot change probe RESULTS (probes dedup on the
+vector id before scoring, and a vector's replicated rows carry the
+identical embedding) — they only grow the index until ``compact()``.
 
 The reference has no similarity surface at all; this extends the north
 star (SURVEY.md §2.11) to the streaming half of the ANN story.
@@ -57,13 +55,8 @@ from pyspark.sql import functions as F
 # (the operators.joins convention).
 
 from ..llm import simsearch
-from ..sources.io import (
-    fs_dir_has_data,
-    fs_recover_tombstone,
-    fs_swap_in,
-    overwrite_atomic,
-    staging_sibling,
-)
+from ..sources.io import fs_dir_has_data, overwrite_atomic
+from .indexlog import IndexLog
 
 
 class IncrementalIvfIndex:
@@ -113,6 +106,7 @@ class IncrementalIvfIndex:
         self.store_pq = store_pq
         self.pq_m = pq_m
         self.pq_ks = pq_ks
+        self.log = IndexLog(spark, self.path, [id_col, "cell"], partition_by=("cell",))
 
     # -- quantizer ---------------------------------------------------------
 
@@ -132,13 +126,7 @@ class IncrementalIvfIndex:
                 "fit() needs a non-empty bootstrap corpus: zero vectors yield no "
                 "quantizer (an empty first micro-batch must not define the index)"
             )
-        rows = [
-            (int(c), int(p), float(v))
-            for c, row in enumerate(cents)
-            for p, v in enumerate(row)
-        ]
-        cdf = self.spark.createDataFrame(rows, "cell INT, pos INT, value DOUBLE")
-        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
+        cbs = None
         if self.store_pq:
             cbs = simsearch.pq_train(
                 df.select(self.id_col, self.vec_col),
@@ -147,17 +135,35 @@ class IncrementalIvfIndex:
                 vec_col=self.vec_col,
                 id_col=self.id_col,
             )
-            cb_rows = [
-                (int(s), int(c), int(p), float(v))
-                for s, book in enumerate(cbs)
-                for c, word in enumerate(book)
-                for p, v in enumerate(word)
-            ]
+        self._save_quantizer(cents, cbs)
+        return cents
+
+    def _save_quantizer(
+        self, cents: list[list[float]], cbs: list[list[list[float]]] | None
+    ) -> None:
+        """Persist the centroids as (cell, pos, value) rows and, when
+        given, the PQ codebooks as (s, c, pos, value) rows — each under
+        the atomic snapshot swap. The writer of the two readers below."""
+        cdf = self.spark.createDataFrame(
+            [
+                (c, p, float(v))
+                for c, row in enumerate(cents)
+                for p, v in enumerate(row)
+            ],
+            "cell INT, pos INT, value DOUBLE",
+        )
+        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
+        if cbs is not None:
             cb_df = self.spark.createDataFrame(
-                cb_rows, "s INT, c INT, pos INT, value DOUBLE"
+                [
+                    (s, c, p, float(v))
+                    for s, book in enumerate(cbs)
+                    for c, word in enumerate(book)
+                    for p, v in enumerate(word)
+                ],
+                "s INT, c INT, pos INT, value DOUBLE",
             )
             overwrite_atomic(cb_df.coalesce(1), self.pq_path)
-        return cents
 
     def _centroids(self) -> list[list[float]] | None:
         """The persisted quantizer, or None when never fit. Discovery goes
@@ -206,8 +212,9 @@ class IncrementalIvfIndex:
         my_layout = (
             "pq" if self.store_pq else "int8" if self.store_quantized else "float"
         )
-        if fs_dir_has_data(self.spark, self.path):
-            cols = self.spark.read.parquet(self.path).columns
+        landed = self.log.landed()
+        if landed is not None:
+            cols = landed.columns
             stored = "pq" if "pq_code" in cols else "int8" if "q_codes" in cols else "float"
             if stored != my_layout:
                 # Appending another layout would not fail loudly: probes
@@ -250,7 +257,7 @@ class IncrementalIvfIndex:
             assigned = simsearch.pq_encode(assigned, cbs, vec_col=self.vec_col).select(
                 self.id_col, "cell", "pq_code"
             )
-        assigned.write.mode("append").partitionBy("cell").parquet(self.path)
+        self.log.append(assigned)
 
     def dedup_batch(
         self,
@@ -315,15 +322,13 @@ class IncrementalIvfIndex:
         )
         pair_cos = simsearch.pair_cosine_udf()
 
-        pool = assigned
-        if max_cell is not None:
-            ok = (
-                assigned.groupBy("cell")
-                .count()
-                .where(F.col("count") <= max_cell)
-                .drop("count")
-            )
-            pool = assigned.join(ok, "cell")
+        def capped(rows: DataFrame) -> DataFrame:
+            if max_cell is None:
+                return rows
+            ok = rows.groupBy("cell").count().where(F.col("count") <= max_cell)
+            return rows.join(ok.drop("count"), "cell")
+
+        pool = capped(assigned)
         a = pool.select("cell", F.col("_id").alias("_id_a"), F.col("_v").alias("_v_a"))
         b = pool.select(
             F.col("cell").alias("_cell_b"),
@@ -337,27 +342,17 @@ class IncrementalIvfIndex:
         )
 
         rejected = dropped_within
-        if fs_dir_has_data(self.spark, self.path):
-            idx = self.spark.read.parquet(self.path)
+        idx = self.log.landed()
+        if idx is not None:
             if "q_codes" in idx.columns:
                 landed_vec = simsearch.dequantize_embedding(
                     F.col("q_codes"), F.col("q_scale")
                 )
             else:
                 landed_vec = F.col(self.vec_col)
-            landed = idx.select(
-                "cell",
-                F.col(self.id_col).alias("_lid"),
-                landed_vec.alias("_lv"),
+            landed = capped(
+                idx.select("cell", F.col(self.id_col).alias("_lid"), landed_vec.alias("_lv"))
             )
-            if max_cell is not None:
-                lok = (
-                    landed.groupBy("cell")
-                    .count()
-                    .where(F.col("count") <= max_cell)
-                    .drop("count")
-                )
-                landed = landed.join(lok, "cell")
             # batch side uses the CAPPED pool (r14, ADVICE): the
             # docstring's contract is that max_cell exempts over-cap
             # cells from BOTH pair searches — joining the uncapped
@@ -401,7 +396,8 @@ class IncrementalIvfIndex:
         from ..operators.validation import psi_drift
 
         cents = self._centroids()
-        if cents is None or not fs_dir_has_data(self.spark, self.path):
+        idx = self.log.landed()
+        if cents is None or idx is None:
             raise ValueError(
                 "occupancy_drift needs a fitted, non-empty index — ingest "
                 "at least one batch first"
@@ -416,7 +412,7 @@ class IncrementalIvfIndex:
                 (F.col("n").cast("double") / F.col("_t").cast("double")).alias("frac"),
             )
 
-        landed = occupancy(self.spark.read.parquet(self.path).select("cell"))
+        landed = occupancy(idx.select("cell"))
         batch = occupancy(
             simsearch.ivf_assign(
                 df.select(self.vec_col),
@@ -458,7 +454,8 @@ class IncrementalIvfIndex:
         cents = self._centroids()
         if cents is None:
             raise ValueError(f"no quantizer at {self.centroid_path}: fit() or ingest first")
-        if not fs_dir_has_data(self.spark, self.path):
+        landed = self.log.landed()
+        if landed is None:
             raise ValueError(
                 f"no index rows at {self.path}: the quantizer exists but nothing "
                 "was ever ingested (or the first append crashed before commit)"
@@ -468,11 +465,7 @@ class IncrementalIvfIndex:
         q = np.array(query_vec, dtype="float64")
         q_hat = q / max(float(np.linalg.norm(q)), 1e-12)
         cells = [int(x) for x in np.argsort(-(c_hat @ q_hat))[:nprobe]]
-        idx = (
-            self.spark.read.parquet(self.path)
-            .where(F.col("cell").isin(cells))
-            .dropDuplicates([self.id_col])
-        )
+        idx = landed.where(F.col("cell").isin(cells)).dropDuplicates([self.id_col])
         qcol = F.array(*[F.lit(float(x)) for x in query_vec])
         if "pq_code" in idx.columns:
             # PQ tier: rank candidates by ADC — the per-subspace lookup
@@ -499,39 +492,25 @@ class IncrementalIvfIndex:
                     t_arr, (F.element_at("pq_code", s + 1) + 1).cast("int")
                 )
                 adc = term if adc is None else adc + term
-            cand_ids = (
-                idx.select(self.id_col, adc.alias("_adc"))
-                .orderBy(F.col("_adc").desc(), F.col(self.id_col))
-                .limit(overfetch * k)
-                .select(self.id_col)
+            ranked = idx.select(F.col(self.id_col), adc.alias("score"))
+        else:
+            vec = (
+                simsearch.dequantize_embedding(F.col("q_codes"), F.col("q_scale"))
+                if "q_codes" in idx.columns
+                else F.col(self.vec_col)
             )
-            exact = rescore_from.join(F.broadcast(cand_ids), self.id_col).select(
-                F.col(self.id_col),
-                F.round(simsearch.cosine(F.col(self.vec_col), qcol), 6).alias("score"),
+            ranked = idx.select(
+                F.col(self.id_col), F.round(simsearch.cosine(vec, qcol), 6).alias("score")
             )
-            return exact.orderBy(F.col("score").desc(), F.col(self.id_col)).limit(k)
-        quantized = "q_codes" in idx.columns
-        vec = (
-            simsearch.dequantize_embedding(F.col("q_codes"), F.col("q_scale"))
-            if quantized
-            else F.col(self.vec_col)
-        )
-        scored = idx.select(
-            F.col(self.id_col),
-            F.round(simsearch.cosine(vec, qcol), 6).alias("score"),
-        )
+        order = [F.col("score").desc(), F.col(self.id_col)]
         if rescore_from is None:
-            return scored.orderBy(F.col("score").desc(), F.col(self.id_col)).limit(k)
-        cand_ids = (
-            scored.orderBy(F.col("score").desc(), F.col(self.id_col))
-            .limit(overfetch * k)
-            .select(self.id_col)
-        )
+            return ranked.orderBy(*order).limit(k)
+        cand_ids = ranked.orderBy(*order).limit(overfetch * k).select(self.id_col)
         exact = rescore_from.join(F.broadcast(cand_ids), self.id_col).select(
             F.col(self.id_col),
             F.round(simsearch.cosine(F.col(self.vec_col), qcol), 6).alias("score"),
         )
-        return exact.orderBy(F.col("score").desc(), F.col(self.id_col)).limit(k)
+        return exact.orderBy(*order).limit(k)
 
     def probe_batch(
         self,
@@ -553,7 +532,8 @@ class IncrementalIvfIndex:
         cents = self._centroids()
         if cents is None:
             raise ValueError(f"no quantizer at {self.centroid_path}: fit() or ingest first")
-        if not fs_dir_has_data(self.spark, self.path):
+        landed = self.log.landed()
+        if landed is None:
             raise ValueError(f"no index rows at {self.path}: ingest before probing")
         if not queries:
             raise ValueError("probe_batch needs at least one query")
@@ -578,8 +558,7 @@ class IncrementalIvfIndex:
         )
 
         idx = (
-            self.spark.read.parquet(self.path)
-            .where(F.col("cell").isin(all_cells))
+            landed.where(F.col("cell").isin(all_cells))
             .join(F.broadcast(pair_df), "cell")
             .dropDuplicates(["query_id", self.id_col])
         )
@@ -705,11 +684,11 @@ class IncrementalIvfIndex:
         ids dedup) but cell pruning degrades until ``rebuild`` is
         re-run — it is idempotent, re-deriving everything from landed
         rows (or ``vectors``), so re-running converges."""
-        if not fs_dir_has_data(self.spark, self.path):
+        idx = self.log.landed()
+        if idx is None:
             raise ValueError(
                 f"rebuild needs a non-empty index at {self.path}: nothing to migrate"
             )
-        idx = self.spark.read.parquet(self.path)
         stored_pq = "pq_code" in idx.columns
         stored_int8 = "q_codes" in idx.columns
         rows = idx.drop("cell").dropDuplicates([self.id_col])
@@ -764,56 +743,10 @@ class IncrementalIvfIndex:
                 ).select(self.id_col, "cell", "pq_code")
             else:
                 new_rows = assigned
-        staging = staging_sibling(self.path)
-        try:
-            new_rows.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        except Exception:
-            from ..sources.io import _fs_for
-
-            fs, p = _fs_for(self.spark, staging)
-            if fs.exists(p):
-                fs.delete(p, True)
-            raise
-        fs_recover_tombstone(self.spark, self.path)
-        fs_swap_in(self.spark, staging, self.path)
-        cdf = self.spark.createDataFrame(
-            [
-                (int(c), int(p), float(v))
-                for c, row in enumerate(cents)
-                for p, v in enumerate(row)
-            ],
-            "cell INT, pos INT, value DOUBLE",
-        )
-        overwrite_atomic(cdf.coalesce(1), self.centroid_path)
-        if cbs is not None:
-            cb_df = self.spark.createDataFrame(
-                [
-                    (int(s), int(c), int(p), float(v))
-                    for s, book in enumerate(cbs)
-                    for c, word in enumerate(book)
-                    for p, v in enumerate(word)
-                ],
-                "s INT, c INT, pos INT, value DOUBLE",
-            )
-            overwrite_atomic(cb_df.coalesce(1), self.pq_path)
+        self.log.replace(new_rows)
+        self._save_quantizer(cents, cbs)
 
     def compact(self) -> None:
         """Rewrite the index with replay-duplicated rows collapsed per
-        (id, cell), keeping the partitioned layout, under the atomic
-        snapshot swap (a crash leaves the old or the new index, never a
-        half-written one)."""
-        if not fs_dir_has_data(self.spark, self.path):
-            return
-        landed = self.spark.read.parquet(self.path).dropDuplicates([self.id_col, "cell"])
-        staging = staging_sibling(self.path)
-        try:
-            landed.write.mode("overwrite").partitionBy("cell").parquet(staging)
-        except Exception:
-            from ..sources.io import _fs_for
-
-            fs, p = _fs_for(self.spark, staging)
-            if fs.exists(p):
-                fs.delete(p, True)
-            raise
-        fs_recover_tombstone(self.spark, self.path)
-        fs_swap_in(self.spark, staging, self.path)
+        (id, cell), keeping the partitioned layout."""
+        self.log.compact()

@@ -35,23 +35,7 @@ from pyspark.sql import functions as F
 
 from ..llm import dedup as dedup_ops
 from ..llm import textops
-
-
-def _read_landed_index(spark: SparkSession, path: str) -> DataFrame | None:
-    """Shared index discovery for the incremental indexes: probe through
-    the Hadoop FileSystem of the path's own scheme (works on
-    file:/S3A/HDFS/ABFS alike — never a driver-local ``os`` probe, which
-    would return "no index" on an object store and silently skip
-    landed-corpus dedup). Returns None ONLY for a never-committed index:
-    a missing path, an empty directory, or a directory holding nothing
-    but hidden entries (parquet's ``_temporary`` from a crashed first
-    append, ``_SUCCESS`` markers). An existing committed path that then
-    fails to read as parquet is a real error and raises."""
-    from ..sources.io import fs_dir_has_data
-
-    if not fs_dir_has_data(spark, path):
-        return None
-    return spark.read.parquet(path)
+from .indexlog import IndexLog
 
 
 def corpus_ingest(
@@ -159,22 +143,10 @@ class IncrementalMinhashIndex:
     streaming state store — so the dedup horizon is the whole corpus
     lifetime, unlike watermark-bounded ``dropDuplicatesWithinWatermark``.
 
-    Index discovery goes through the Hadoop FileSystem API of the path's
-    own scheme, so the index may live on S3/HDFS/ABFS — never a
-    driver-local ``os`` probe (a local-only probe would return "no index"
-    on an object store and SILENTLY skip landed-corpus dedup, the worst
-    failure mode for this component).
-
-    Crash/replay discipline: the per-batch append is plain parquet, not a
-    transactional commit — if ``foreachBatch`` replays a batch after a
-    crash between the append and the checkpoint commit, the survivors'
-    index rows land twice. Duplicated index rows cannot change dedup
-    DECISIONS (a replayed doc never matches itself — the probe join
-    excludes ``doc_id`` self-pairs — and duplicate (new, old) witnesses
-    collapse via ``dropDuplicates`` before the Jaccard verify); they only
-    grow the index. Run ``compact()`` periodically to rewrite the index
-    deduplicated (atomic swap), or back the index with a transactional
-    table format (Delta/Iceberg) in production.
+    Storage, replay and compaction: an ``IndexLog`` set log keyed
+    (doc_id, band). The probe join excludes ``doc_id`` self-pairs and
+    duplicate (new, old) witnesses collapse before the Jaccard verify,
+    so replayed rows cannot change a decision.
     """
 
     def __init__(
@@ -196,33 +168,12 @@ class IncrementalMinhashIndex:
         self.n_shingle = n_shingle
         self.num_hashes = num_hashes
         self.bands = bands
-
-    def _landed(self) -> DataFrame | None:
-        """The landed index, or None ONLY when no index has ever been
-        written. Existence is probed through the Hadoop FileSystem of the
-        path's scheme (works on file:/S3A/HDFS/ABFS alike); an existing
-        path that then fails to read as parquet is a real error and
-        raises — it must never be silently treated as "no index" (that
-        would skip landed-corpus dedup while still appending rows).
-        A directory holding ONLY hidden entries (``_temporary`` from a
-        crashed, never-committed first append; ``_SUCCESS`` markers) is
-        "write never committed", not "index unreadable": return None so
-        the pipeline proceeds instead of wedging every batch on an
-        unreadable-parquet error."""
-        landed = _read_landed_index(self.spark, self.path)
-        return landed
+        self.log = IndexLog(spark, path, ["doc_id", "band"])
 
     def compact(self) -> None:
-        """Rewrite the index with replay-duplicated rows collapsed
-        (atomic snapshot swap; see the class docstring). One shuffle on
-        (doc_id, band) over index rows — tens of bytes per doc-band, not
-        corpus text — so this is cheap relative to the corpus it guards."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        overwrite_atomic(landed.dropDuplicates(["doc_id", "band"]), self.path)
+        """Rewrite the index with replay-duplicated rows collapsed — one
+        shuffle over index rows, tens of bytes per doc-band."""
+        self.log.compact()
 
     @staticmethod
     def _landed_matches(idx: DataFrame, landed: DataFrame) -> DataFrame:
@@ -257,7 +208,7 @@ class IncrementalMinhashIndex:
         without mutating the index and without the within-batch pass.
         Returns an empty frame when no index has been written. ``jaccard``
         is rounded to 4 dp, matching ``near_dup_pairs_minhash``."""
-        landed = self._landed()
+        landed = self.log.landed()
         if landed is None:
             id_type = docs.schema[self.id_col].dataType.simpleString()
             return self.spark.createDataFrame(
@@ -320,7 +271,7 @@ class IncrementalMinhashIndex:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
-        landed = self._landed()
+        landed = self.log.landed()
         if landed is not None:
             dup_ids = (
                 self._landed_matches(idx, landed)
@@ -334,7 +285,7 @@ class IncrementalMinhashIndex:
             )
         else:
             idx_out = idx
-        idx_out.write.mode("append").parquet(self.path)
+        self.log.append(idx_out)
         idx.unpersist()
         doc_tbl.unpersist()
         return kept
@@ -365,12 +316,9 @@ class IncrementalDigestIndex:
     uniformly-distributed digest (no skew by construction). At 100 TB
     store it bucketed by digest so the probe is a co-located join.
 
-    Crash/replay: a replayed batch's append lands its rows twice, which
-    cannot change decisions — the probe ignores matches with the SAME doc
-    id (a replayed doc must not be rejected against its own landed row),
-    and duplicate (digest, id) rows collapse in ``compact()`` under the
-    same atomic snapshot swap the other indexes use. Same FileSystem-API
-    discovery discipline (object-store safe).
+    Storage, replay and compaction: an ``IndexLog`` set log keyed
+    (digest, id); the probe ignores matches with the SAME doc id, so a
+    replayed document is never rejected against its own landed row.
     """
 
     def __init__(
@@ -386,6 +334,7 @@ class IncrementalDigestIndex:
         self.text_col = text_col
         self.id_col = id_col
         self.canonical = canonical
+        self.log = IndexLog(spark, path, ["_dig", id_col])
 
     def _digest(self) -> F.Column:
         text = F.col(self.text_col)
@@ -393,17 +342,11 @@ class IncrementalDigestIndex:
             text = dedup_ops.canonical_text(text)
         return F.sha2(text, 256)
 
-    def _landed(self) -> DataFrame | None:
-        """Landed (digest, id) rows, or None ONLY when no index was ever
-        written (an existing-but-unreadable path raises; hidden-entry-only
-        debris from a crashed first append counts as never-written)."""
-        return _read_landed_index(self.spark, self.path)
-
     def probe(self, docs: DataFrame) -> DataFrame:
         """READ-ONLY exact-dup lookup: (doc_id, old_id) for every batch
         document whose digest already exists in the landed index under a
         DIFFERENT id. Empty frame when no index has been written."""
-        landed = self._landed()
+        landed = self.log.landed()
         id_type = docs.schema[self.id_col].dataType.simpleString()
         if landed is None:
             return self.spark.createDataFrame([], f"doc_id {id_type}, old_id {id_type}")
@@ -439,17 +382,15 @@ class IncrementalDigestIndex:
         """Append (digest, id) index rows for documents that survived
         the FULL ladder — the deferred-landing half of ``filter_batch``.
         NULL-keyed rows are skipped (they were never dedup candidates).
-        Replay-safe like ``dedup_batch``'s append: duplicated rows
-        collapse in ``compact()`` and cannot change decisions (the
-        landed probe ignores same-id matches).  An all-rejected batch
-        writes nothing at all — not even empty part files — so "no doc
-        ever claimed this URL" stays observable as an absent index."""
+        An all-rejected batch writes nothing at all — not even empty part
+        files — so "no doc ever claimed this URL" stays observable as an
+        absent index."""
         rows = docs.select(F.col(self.id_col), self._digest().alias("_dig")).where(
             F.col("_dig").isNotNull()
         )
         if rows.isEmpty():
             return
-        rows.write.mode("append").parquet(self.path)
+        self.log.append(rows)
 
     def _dedup(self, docs: DataFrame, record: bool) -> DataFrame:
         # NULL digest = no dedup key (NULL text, or at the URL tier a
@@ -464,7 +405,7 @@ class IncrementalDigestIndex:
         keyed = hashed.where(F.col("_dig").isNotNull())
         keep_ids = keyed.groupBy("_dig").agg(F.min(self.id_col).alias(self.id_col))
         kept = keyed.join(keep_ids, [self.id_col, "_dig"], "semi")
-        landed = self._landed()
+        landed = self.log.landed()
         if landed is not None:
             dup_ids = (
                 kept.select(self.id_col, "_dig")
@@ -476,20 +417,15 @@ class IncrementalDigestIndex:
             kept = kept.join(dup_ids, self.id_col, "left_anti")
         kept = kept.unionByName(keyless).localCheckpoint(eager=True)
         if record:
-            kept.select(self.id_col, "_dig").where(
-                F.col("_dig").isNotNull()
-            ).write.mode("append").parquet(self.path)
+            self.log.append(
+                kept.select(self.id_col, "_dig").where(F.col("_dig").isNotNull())
+            )
         return kept.drop("_dig")
 
     def compact(self) -> None:
-        """Collapse replay-duplicated (digest, id) rows (atomic snapshot
-        swap) — one shuffle over 40-byte index rows."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        overwrite_atomic(landed.dropDuplicates(["_dig", self.id_col]), self.path)
+        """Collapse replay-duplicated (digest, id) rows — one shuffle over
+        40-byte index rows."""
+        self.log.compact()
 
 
 class IncrementalUrlIndex(IncrementalDigestIndex):
@@ -505,9 +441,8 @@ class IncrementalUrlIndex(IncrementalDigestIndex):
 
     This is the digest index with the key swapped to
     ``sha2(canonical_url(url_col))`` — everything else (within-batch
-    min-id keep, landed anti-join, replay tolerance via same-id probe
-    exclusion, sentinel-free compaction, FileSystem-API discovery)
-    inherits unchanged. ~40 bytes per landed URL; uniformly-distributed
+    min-id keep, landed anti-join, the ``IndexLog`` set log and its
+    same-id replay tolerance) inherits unchanged. ~40 bytes per landed URL; uniformly-distributed
     join key by construction. Slots in FRONT of the text gates in
     ``ingest_corpus_batch`` (``url_index=``): a rejected re-crawl never
     pays extraction, quality scoring, or signature costs.
@@ -546,15 +481,8 @@ class IncrementalSpanIndex:
     4. the batch's per-digest counts append to the index keyed by
        ``batch_id``.
 
-    Exactly-once under replay WITHOUT a transactional store: index rows
-    carry the ``foreachBatch`` batch id, and the history probe (a) skips
-    rows tagged with the CURRENT batch id — a replayed batch's own landed
-    counts would otherwise count every one of its spans against itself —
-    and (b) collapses ``dropDuplicates([digest, batch_id])`` so replays
-    of earlier batches contribute once. Together a replayed batch sees
-    exactly the history its first run saw. This is a stronger requirement
-    than the minhash index's (where duplicated rows can't change
-    decisions) because counting is threshold-sensitive.
+    Storage, replay and compaction: an ``IndexLog`` count log keyed by
+    digest — a replayed batch sees exactly the history its first run saw.
 
     Semantics note: excision is forward-looking — a span that crosses the
     threshold in batch N is removed from batch N onward; copies already
@@ -566,9 +494,7 @@ class IncrementalSpanIndex:
     partial aggregation; at 100 TB it lives partitioned by digest prefix
     on the object store and the probe is a broadcast of the batch's
     distinct digests against it (or a co-located join once the index
-    outgrows broadcast range). Index discovery uses the Hadoop FileSystem
-    API of the path's scheme — same discipline as
-    ``IncrementalMinhashIndex``.
+    outgrows broadcast range).
     """
 
     def __init__(
@@ -588,13 +514,7 @@ class IncrementalSpanIndex:
         self.span_tokens = span_tokens
         self.min_docs = min_docs
         self.delimiter = delimiter
-
-    def _landed(self) -> DataFrame | None:
-        """Landed per-(digest, batch) counts, or None ONLY when no index
-        was ever written (an existing-but-unreadable path raises — it must
-        never silently become 'no history'; hidden-entry-only debris from
-        a crashed first append counts as never-written)."""
-        return _read_landed_index(self.spark, self.path)
+        self.log = IndexLog(spark, path, ["_dig"], count="_n")
 
     def clean_batch(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Return the batch with corpus-lifetime boilerplate spans excised
@@ -609,28 +529,7 @@ class IncrementalSpanIndex:
         batch_counts = seg.groupBy("_dig").agg(
             F.count_distinct(F.col(self.id_col)).alias("_n")
         )
-        landed = self._landed()
-        if landed is not None:
-            # exclude THIS batch's id from history: on a replay the landed
-            # index already holds this batch's counts, and summing them in
-            # would double-count every span against itself — flipping
-            # excision decisions the first run didn't make. With the
-            # self-id excluded (plus the (digest, batch) collapse for
-            # replays of OTHER batches), a replayed batch sees exactly the
-            # history the original run saw.
-            history = (
-                landed.where(F.col("_batch") != F.lit(batch_id))
-                .dropDuplicates(["_dig", "_batch"])
-                .groupBy("_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-            combined = (
-                batch_counts.unionByName(history)
-                .groupBy("_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-        else:
-            combined = batch_counts
+        combined = self.log.with_history(batch_counts, batch_id)
         boiler = combined.where(F.col("_n") >= self.min_docs).select("_dig")
 
         flagged = seg.join(F.broadcast(boiler.withColumn("_b", F.lit(True))), "_dig", "left")
@@ -660,34 +559,14 @@ class IncrementalSpanIndex:
             )
             .localCheckpoint(eager=True)
         )
-        batch_counts.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(self.path)
+        self.log.append(batch_counts, batch_id)
         seg.unpersist()
         return out
 
     def compact(self) -> None:
-        """Rewrite the index with replayed batch rows collapsed and counts
-        pre-aggregated per digest under a single batch key (atomic
-        snapshot swap) — probes after compaction read one row per distinct
-        span digest.
-
-        Run only at a quiesced point (stream stopped, or last batch's
-        checkpoint committed): compaction folds per-batch rows into the
-        sentinel batch ``-1``, after which a replay of a pre-compaction
-        batch can no longer exclude its own contribution from history."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        collapsed = (
-            landed.dropDuplicates(["_dig", "_batch"])
-            .groupBy("_dig")
-            .agg(F.sum("_n").alias("_n"))
-            .withColumn("_batch", F.lit(-1).cast("long"))
-        )
-        overwrite_atomic(collapsed, self.path)
+        """Fold the per-batch rows to one row per span digest; quiesced
+        points only (see ``IndexLog``)."""
+        self.log.compact()
 
 
 class IncrementalLineIndex:
@@ -699,11 +578,8 @@ class IncrementalLineIndex:
     as soon as its CORPUS-LIFETIME count crosses the threshold. The
     streaming twin of ``llm.textops.strip_common_lines`` (which counts
     within the frame it is given and cannot see a footer planted across
-    micro-batches); r13, VERDICT item 4. Same replay discipline as
-    ``IncrementalSpanIndex``: index rows carry the ``foreachBatch``
-    batch id, the history probe skips rows tagged with the CURRENT
-    batch id and collapses ``(group, digest, batch)`` duplicates, so a
-    replayed batch sees exactly the history its first run saw.
+    micro-batches); r13, VERDICT item 4. Storage, replay and compaction:
+    an ``IndexLog`` count log keyed by (group, digest).
 
     Per batch (``clean_batch(docs, batch_id)``):
 
@@ -746,9 +622,7 @@ class IncrementalLineIndex:
         self.id_col = id_col
         self.group_col = group_col
         self.min_docs = min_docs
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
+        self.log = IndexLog(spark, path, ["_grp", "_dig"], count="_n")
 
     def clean_batch(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Return ``(id_col, group_col, text_clean, n_dropped)`` with
@@ -770,23 +644,7 @@ class IncrementalLineIndex:
         batch_counts = lines.groupBy("_grp", "_dig").agg(
             F.count_distinct(F.col(self.id_col)).alias("_n")
         )
-        landed = self._landed()
-        if landed is not None:
-            # self-batch exclusion + replay collapse: see the class
-            # docstring / IncrementalSpanIndex for the full argument
-            history = (
-                landed.where(F.col("_batch") != F.lit(batch_id))
-                .dropDuplicates(["_grp", "_dig", "_batch"])
-                .groupBy("_grp", "_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-            combined = (
-                batch_counts.unionByName(history)
-                .groupBy("_grp", "_dig")
-                .agg(F.sum("_n").alias("_n"))
-            )
-        else:
-            combined = batch_counts
+        combined = self.log.with_history(batch_counts, batch_id)
         chrome = combined.where(F.col("_n") >= self.min_docs).select("_grp", "_dig")
 
         # no broadcast hint (r14, ADVICE): the chrome set is CORPUS-
@@ -824,29 +682,14 @@ class IncrementalLineIndex:
             )
             .localCheckpoint(eager=True)
         )
-        batch_counts.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(self.path)
+        self.log.append(batch_counts, batch_id)
         lines.unpersist()
         return out
 
     def compact(self) -> None:
-        """Collapse replayed rows and pre-aggregate counts per (group,
-        digest) under the sentinel batch ``-1`` (atomic snapshot swap).
-        Run only at a quiesced point — same contract as
-        ``IncrementalSpanIndex.compact``."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        collapsed = (
-            landed.dropDuplicates(["_grp", "_dig", "_batch"])
-            .groupBy("_grp", "_dig")
-            .agg(F.sum("_n").alias("_n"))
-            .withColumn("_batch", F.lit(-1).cast("long"))
-        )
-        overwrite_atomic(collapsed, self.path)
+        """Fold the per-batch rows to one row per (group, digest);
+        quiesced points only (see ``IndexLog``)."""
+        self.log.compact()
 
 
 class IncrementalSubstringIndex:
@@ -873,13 +716,8 @@ class IncrementalSubstringIndex:
     4. the batch's per-digest counts append to the index keyed by
        ``batch_id``.
 
-    Replay discipline is ``IncrementalSpanIndex``'s, because counting
-    is threshold-sensitive: the history probe skips rows tagged with
-    the CURRENT batch id (a replayed batch must not count its own
-    landed grams against itself) and collapses
-    ``dropDuplicates([_g, _batch])`` so replays of earlier batches
-    contribute once — a replayed batch sees exactly the history its
-    first run saw.
+    Storage, replay and compaction: an ``IndexLog`` count log keyed by
+    gram digest.
 
     Scale: the index shuffles 16-byte digests with map-side partial
     aggregation, one row per token position per batch — the anchor-gram
@@ -910,9 +748,7 @@ class IncrementalSubstringIndex:
         self.id_col = id_col
         self.min_len = int(min_len)
         self.min_count = int(min_count)
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
+        self.log = IndexLog(spark, path, ["_g"], count="_n")
 
     def clean_batch(self, docs: DataFrame, batch_id: int) -> DataFrame:
         """Return the batch with corpus-lifetime duplicated ≥L-token
@@ -925,49 +761,21 @@ class IncrementalSubstringIndex:
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
         batch_counts = grams.groupBy("_g").agg(F.count("*").alias("_n"))
-        landed = self._landed()
-        if landed is not None:
-            history = (
-                landed.where(F.col("_batch") != F.lit(batch_id))
-                .dropDuplicates(["_g", "_batch"])
-                .groupBy("_g")
-                .agg(F.sum("_n").alias("_n"))
-            )
-            combined = (
-                batch_counts.unionByName(history)
-                .groupBy("_g")
-                .agg(F.sum("_n").alias("_n"))
-            )
-        else:
-            combined = batch_counts
+        combined = self.log.with_history(batch_counts, batch_id)
         dup = combined.where(F.col("_n") >= self.min_count).select("_g")
         marks = grams.join(F.broadcast(dup), "_g", "left_semi")
         spans = dedup_ops.covered_spans(marks, self.id_col, self.min_len)
         out = dedup_ops.excise_spans(
             docs, spans, self.text_col, self.id_col
         ).localCheckpoint(eager=True)
-        batch_counts.withColumn("_batch", F.lit(batch_id).cast("long")).write.mode(
-            "append"
-        ).parquet(self.path)
+        self.log.append(batch_counts, batch_id)
         grams.unpersist()
         return out
 
     def compact(self) -> None:
-        """Fold per-batch gram rows to one row per distinct digest under
-        the sentinel batch −1 (atomic snapshot swap); quiesced points
-        only — pre-compaction replays lose self-exclusion after."""
-        from ..sources.io import overwrite_atomic
-
-        landed = self._landed()
-        if landed is None:
-            return
-        collapsed = (
-            landed.dropDuplicates(["_g", "_batch"])
-            .groupBy("_g")
-            .agg(F.sum("_n").alias("_n"))
-            .withColumn("_batch", F.lit(-1).cast("long"))
-        )
-        overwrite_atomic(collapsed, self.path)
+        """Fold per-batch gram rows to one row per distinct digest;
+        quiesced points only (see ``IndexLog``)."""
+        self.log.compact()
 
 
 class IncrementalCmsIndex:
@@ -987,13 +795,8 @@ class IncrementalCmsIndex:
     per batch, forever, with the sketch's hard never-underestimate
     guarantee (a flood can never hide).
 
-    Crash/replay: batch rows carry ``update_batch``'s ``batch_id``; a
-    replayed append lands byte-identical (batch, d, bucket, c) rows,
-    which every read collapses with ``dropDuplicates`` before summing —
-    so replays change nothing (the span-index discipline). ``compact()``
-    folds history into the sentinel batch −1 under the atomic snapshot
-    swap; run it only at a quiesced point, since pre-compaction batch ids
-    can no longer be distinguished afterwards.
+    Storage, replay and compaction: an ``IndexLog`` count log keyed by
+    (d, bucket) with count ``c`` — replays change nothing.
     """
 
     def __init__(
@@ -1007,30 +810,14 @@ class IncrementalCmsIndex:
         self.path = path
         self.key_col = key_col
         self.width = width
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
-
-    def _merged(self) -> DataFrame | None:
-        """Replay-collapsed, batch-summed (d, bucket, c) sketch."""
-        landed = self._landed()
-        if landed is None:
-            return None
-        return (
-            landed.dropDuplicates(["_batch", "d", "bucket", "c"])
-            .groupBy("d", "bucket")
-            .agg(F.sum("c").alias("c"))
-        )
+        self.log = IndexLog(spark, path, ["d", "bucket"], count="c")
 
     def update_batch(self, df: DataFrame, batch_id: int) -> None:
         """Append this batch's sketch rows (≤ depth·width, keyed by
         ``batch_id`` for replay collapse)."""
         from ..operators.aggregates import count_min_table
 
-        sketch = count_min_table(df, self.key_col, width=self.width).withColumn(
-            "_batch", F.lit(int(batch_id)).cast("long")
-        )
-        sketch.write.mode("append").parquet(self.path)
+        self.log.append(count_min_table(df, self.key_col, width=self.width), batch_id)
 
     def estimate(self, keys: DataFrame) -> DataFrame:
         """(key, est_n) frequency estimates against the whole landed
@@ -1038,7 +825,7 @@ class IncrementalCmsIndex:
         seen estimate ≥ 0 from collision noise. Empty-index → est_n 0."""
         from ..operators.aggregates import cms_estimate
 
-        merged = self._merged()
+        merged = self.log.merged()
         if merged is None:
             return keys.select(
                 F.col(self.key_col), F.lit(0).cast("long").alias("est_n")
@@ -1046,17 +833,9 @@ class IncrementalCmsIndex:
         return cms_estimate(merged, keys, self.key_col, width=self.width)
 
     def compact(self) -> None:
-        """Fold per-batch sketch rows into one ≤ depth·width snapshot
-        under the sentinel batch −1 (atomic swap); quiesced points only —
-        replayed pre-compaction appends are indistinguishable after."""
-        from ..sources.io import overwrite_atomic
-
-        merged = self._merged()
-        if merged is None:
-            return
-        overwrite_atomic(
-            merged.withColumn("_batch", F.lit(-1).cast("long")), self.path
-        )
+        """Fold per-batch sketch rows into one ≤ depth·width snapshot;
+        quiesced points only (see ``IndexLog``)."""
+        self.log.compact()
 
 
 class IncrementalWordCountIndex:
@@ -1070,42 +849,26 @@ class IncrementalWordCountIndex:
     ``IncrementalCmsIndex``'s estimates when the vocabulary fits —
     Zipf makes it a few GB even at web scale.
 
-    Counts merge by ADDITION, so append IS merge (the CMS-index
-    discipline): each batch writes its own (word, count) rows keyed by
-    ``batch_id``; reads collapse replays with ``dropDuplicates`` on
-    (_batch, word) and groupBy-sum; ``compact()`` folds history into
-    the sentinel batch −1 under the atomic snapshot swap (quiesced
-    points only)."""
+    Counts merge by ADDITION, so append IS merge: an ``IndexLog`` count
+    log keyed by word with count ``count``."""
 
     def __init__(self, spark: SparkSession, path: str, text_col: str = "text") -> None:
         self.spark = spark
         self.path = path
         self.text_col = text_col
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
+        self.log = IndexLog(spark, path, ["word"], count="count")
 
     def update_batch(self, df: DataFrame, batch_id: int) -> None:
         """Append this batch's (word, count) rows (vocabulary-of-batch
         sized, keyed by ``batch_id`` for replay collapse)."""
         from ..llm.tokenize import word_count_table
 
-        wc = word_count_table(df, self.text_col).withColumn(
-            "_batch", F.lit(int(batch_id)).cast("long")
-        )
-        wc.write.mode("append").parquet(self.path)
+        self.log.append(word_count_table(df, self.text_col), batch_id)
 
     def counts(self) -> DataFrame | None:
         """Replay-collapsed, batch-summed (word, count) over the whole
         landed history; None when nothing has landed."""
-        landed = self._landed()
-        if landed is None:
-            return None
-        return (
-            landed.dropDuplicates(["_batch", "word"])
-            .groupBy("word")
-            .agg(F.sum("count").cast("long").alias("count"))
-        )
+        return self.log.merged()
 
     def train(self, n_merges: int = 50, min_count: int = 2) -> list[tuple[str, str]]:
         """Retrain the BPE merge table from the landed counts — identical
@@ -1120,14 +883,9 @@ class IncrementalWordCountIndex:
         return bpe_train_from_counts(wc, n_merges=n_merges, min_count=min_count)
 
     def compact(self) -> None:
-        """Fold per-batch rows into one vocabulary-sized snapshot under
-        the sentinel batch −1 (atomic swap); quiesced points only."""
-        from ..sources.io import overwrite_atomic
-
-        wc = self.counts()
-        if wc is None:
-            return
-        overwrite_atomic(wc.withColumn("_batch", F.lit(-1).cast("long")), self.path)
+        """Fold per-batch rows into one vocabulary-sized snapshot;
+        quiesced points only (see ``IndexLog``)."""
+        self.log.compact()
 
 
 class PersistentBloomGate:
@@ -1563,31 +1321,24 @@ def ingest_corpus_batch(
         # dedup_batch also ingests the survivors' vectors, so the ANN
         # store and the corpus store stay row-aligned.
         kept = ann_index.dedup_batch(kept, threshold=ann_threshold)
-    if span_index is not None:
-        cleaned = span_index.clean_batch(kept, batch_id)
-        kept = (
+
+    def excised(kept: DataFrame, cleaned: DataFrame, n_col: str, as_col: str) -> DataFrame:
+        # the excision tier's text replaces the batch text; its drop
+        # count lands under its own name, so tiers never overwrite it
+        return (
             kept.drop(text_col)
-            .join(cleaned.select(id_col, "text_clean", "n_dropped"), id_col)
+            .join(cleaned.select(id_col, "text_clean", F.col(n_col).alias(as_col)), id_col)
             .withColumnRenamed("text_clean", text_col)
         )
+
+    if span_index is not None:
+        kept = excised(kept, span_index.clean_batch(kept, batch_id), "n_dropped", "n_dropped")
     if line_index is not None:
         # cross-batch common-LINE chrome excision (r13) — runs after the
         # span index (spans judge the body; lines catch verbatim per-line
-        # chrome like footers) on whatever text the ladder has produced;
-        # its drop count lands under its own name so the span index's
-        # n_dropped survives when both gates run
-        lcleaned = line_index.clean_batch(kept, batch_id)
-        kept = (
-            kept.drop(text_col)
-            .join(
-                lcleaned.select(
-                    id_col,
-                    "text_clean",
-                    F.col("n_dropped").alias("n_lines_dropped"),
-                ),
-                id_col,
-            )
-            .withColumnRenamed("text_clean", text_col)
+        # chrome like footers) on whatever text the ladder has produced
+        kept = excised(
+            kept, line_index.clean_batch(kept, batch_id), "n_dropped", "n_lines_dropped"
         )
     if substring_index is not None:
         # exact-substring excision LAST of the excision tiers (r14):
@@ -1595,18 +1346,8 @@ def ingest_corpus_batch(
         # structure-reading line gate must have already run, and its
         # per-token-position index rows should only price text the
         # cheaper excisions passed — see the docstring order note
-        scleaned = substring_index.clean_batch(kept, batch_id)
-        kept = (
-            kept.drop(text_col)
-            .join(
-                scleaned.select(
-                    id_col,
-                    "text_clean",
-                    F.col("n_removed").alias("n_substr_removed"),
-                ),
-                id_col,
-            )
-            .withColumnRenamed("text_clean", text_col)
+        kept = excised(
+            kept, substring_index.clean_batch(kept, batch_id), "n_removed", "n_substr_removed"
         )
     if url_index is not None:
         # deferred URL landing (r14): only full-ladder survivors claim
@@ -1782,12 +1523,8 @@ class IncrementalQidIndex:
     audit is the classic leak: 4 uniques in 4 batches look fine four
     times and ship a size-4 class at k=5.)
 
-    Counts merge by ADDITION, so append IS merge (the
-    ``IncrementalWordCountIndex`` discipline): each batch appends its
-    own (qid..., n) rows keyed by ``batch_id``; reads collapse replays
-    with ``dropDuplicates`` on (_batch, qid...) and groupBy-sum;
-    ``compact()`` folds history into the sentinel batch −1 under the
-    atomic snapshot swap (quiesced points only). State is bounded by
+    Counts merge by ADDITION, so append IS merge: an ``IndexLog`` count
+    log keyed by the QID columns with count ``n``. State is bounded by
     QID-combination cardinality, never corpus rows.
 
     ``audit(k)`` returns the identical one-row summary as the batch
@@ -1799,31 +1536,19 @@ class IncrementalQidIndex:
         self.spark = spark
         self.path = path
         self.qid_cols = list(qid_cols)
-
-    def _landed(self) -> DataFrame | None:
-        return _read_landed_index(self.spark, self.path)
+        self.log = IndexLog(spark, path, self.qid_cols, count="n")
 
     def update_batch(self, df: DataFrame, batch_id: int) -> None:
         """Append this batch's (qid..., n) class counts (batch-class
         sized, keyed by ``batch_id`` for replay collapse)."""
-        counts = (
-            df.groupBy(*[F.col(c) for c in self.qid_cols])
-            .agg(F.count("*").cast("long").alias("n"))
-            .withColumn("_batch", F.lit(int(batch_id)).cast("long"))
-        )
-        counts.write.mode("append").parquet(self.path)
+        counts = df.groupBy(*self.qid_cols).agg(F.count("*").cast("long").alias("n"))
+        self.log.append(counts, batch_id)
 
     def classes(self) -> DataFrame | None:
         """Replay-collapsed, batch-summed class table over the landed
         history; None when nothing has landed."""
-        landed = self._landed()
-        if landed is None:
-            return None
-        return (
-            landed.dropDuplicates(["_batch", *self.qid_cols])
-            .groupBy(*self.qid_cols)
-            .agg(F.sum("n").cast("long").alias("class_size"))
-        )
+        merged = self.log.merged()
+        return None if merged is None else merged.withColumnRenamed("n", "class_size")
 
     def audit(self, k: int = 5) -> DataFrame:
         """The one-row release-gate summary over everything landed —
@@ -1838,16 +1563,6 @@ class IncrementalQidIndex:
         return k_anonymity_summary(cls, "class_size", k)
 
     def compact(self) -> None:
-        """Fold per-batch rows into one class-table snapshot under the
-        sentinel batch −1 (atomic swap); quiesced points only."""
-        from ..sources.io import overwrite_atomic
-
-        cls = self.classes()
-        if cls is None:
-            return
-        overwrite_atomic(
-            cls.withColumnRenamed("class_size", "n").withColumn(
-                "_batch", F.lit(-1).cast("long")
-            ),
-            self.path,
-        )
+        """Fold per-batch rows into one class-table snapshot; quiesced
+        points only (see ``IndexLog``)."""
+        self.log.compact()

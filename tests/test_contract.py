@@ -81,17 +81,22 @@ def test_driver_ordering_is_a_permutation():
     assert len(ordered) == len(REGISTRY)
 
 
-def test_stable_order_env_disables_disk_derived_rotation(monkeypatch):
-    """The window rotation reads CORRECTNESS_r*.json from the repo root —
-    a hidden input to the public queries() ordering. The escape hatch must
-    really escape: with SPARK_GRAFT_STABLE_ORDER=1 the ordering is pure
-    registration order, independent of checkout state."""
-    from simple_pos_kafka_pyspark_airflow_spark.plans.contract import driver_ordered_registry
+def test_driver_ordering_never_writes_the_ledger(tmp_path, monkeypatch):
+    """Ordering the registry is read-only: a green round newer than the
+    ledger's watermark is visible on disk, yet ``driver_ordered_registry``
+    leaves the ledger file byte-for-byte unchanged (syncing is the
+    ``sync`` CLI's job)."""
+    import json
 
-    monkeypatch.setenv("SPARK_GRAFT_STABLE_ORDER", "1")
-    assert list(driver_ordered_registry()) == list(REGISTRY)
-    monkeypatch.delenv("SPARK_GRAFT_STABLE_ORDER")
-    assert list(driver_ordered_registry()) != list(REGISTRY)
+    from simple_pos_kafka_pyspark_airflow_spark.plans import contract
+
+    p = tmp_path / "certified_oracles.json"
+    p.write_text(json.dumps({"synced_through": 5, "queries": {}}))
+    before = p.read_bytes()
+    monkeypatch.setattr(contract, "_CERT_FILE", str(p))
+    monkeypatch.setattr(contract, "_green_rows_from_disk", lambda: {"q_agg_sum": [6]})
+    contract.driver_ordered_registry()
+    assert p.read_bytes() == before
 
 
 def test_certified_rotate_oldest_first():

@@ -3261,24 +3261,14 @@ def test_predicted_lang_codegen_equals_hof_reference(spark, sf_dir):
 
 
 def test_fuzzy_join_jaccard_hot_shingle_skew_safe(spark):
-    """r15 (VERDICT r14 what's-wrong #1): the cluster-profile dfreq mode
-    (``spark.graft.jaccard.dfreq=agg``) must compute document frequency
-    WITHOUT a count window partitioned by the shingle hash — a hot
-    shingle (here in ~30% of docs per side) would land its whole posting
-    list in ONE window task, and AQE can split a skewed join partition
-    but never a window partition. Pin: in agg mode the only _h-alone
-    window is gone (the dfreq comes back via broadcast), and BOTH modes
-    produce identical results that equal brute force on the skewed
-    fixture. (The default stays the window form — measured 20-30%
-    faster locally; the agg form is the 100 TB escape hatch, same
-    pattern as cacheutil.materialize.)"""
+    """A hot stopword shingle (here in ~30% of docs per side) must not
+    change the join's answer: the common-order document frequency is one
+    count window over the shingle hash, and the result equals brute
+    force on the skewed fixture."""
     import io
     from contextlib import redirect_stdout
 
-    from simple_pos_kafka_pyspark_airflow_spark.llm.dedup import (
-        DFREQ_MODE_KEY,
-        fuzzy_join_jaccard,
-    )
+    from simple_pos_kafka_pyspark_airflow_spark.llm.dedup import fuzzy_join_jaccard
 
     # one stopword trigram ("the end now") planted in 30% of docs per side
     hot = "the end now"
@@ -3300,19 +3290,8 @@ def test_fuzzy_join_jaccard_hot_shingle_skew_safe(spark):
         return rows, buf.getvalue()
 
     got_default, plan_default = run()
-    # default: the dfreq window over _h alone IS present (documented local
-    # optimum) — this test is about the escape hatch, assert it exists
+    # the dfreq window over _h alone is the plan's document frequency
     assert "windowspecdefinition(_h#" in plan_default
-
-    spark.conf.set(DFREQ_MODE_KEY, "agg")
-    try:
-        got_agg, plan_agg = run()
-    finally:
-        spark.conf.unset(DFREQ_MODE_KEY)
-    assert "windowspecdefinition(_h#" not in plan_agg, (
-        "agg mode must not key a count window by the shingle hash alone"
-    )
-    assert "BroadcastExchange" in plan_agg  # dfreq join-back broadcast
 
     def shingles(text, n=3):
         toks = text.lower().split()
@@ -3325,7 +3304,7 @@ def test_fuzzy_join_jaccard_hot_shingle_skew_safe(spark):
         for lid, s in L for rid, t in R
         if len(shingles(s) & shingles(t)) / len(shingles(s) | shingles(t)) >= 0.5
     )
-    assert got_default == want and got_agg == want
+    assert got_default == want
     assert len(want) >= 12  # every i↔100+i twin qualifies
 
 
@@ -3618,7 +3597,10 @@ def test_classify_quality_scores_and_gate(spark):
 def test_extract_html_text_edge_cases(spark):
     """Planted extraction behaviors beyond the contract row: each case
     isolates one rule of the C4/jusText-shape extractor."""
-    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import extract_html_text
+    from simple_pos_kafka_pyspark_airflow_spark.llm.textops import (
+        extract_html_text,
+        extract_html_text_rows,
+    )
 
     cases = [
         # (html, expected_text, n_lines, n_kept)
@@ -3645,9 +3627,11 @@ def test_extract_html_text_edge_cases(spark):
          "attrs do not leak words", 1, 1),
         # empty / tags-only input
         ("<div></div><p> </p>", "", 0, 0),
+        # NULL html: the row survives with every output NULL
+        (None, None, None, None),
     ]
     df = spark.createDataFrame(
-        [(i, h) for i, (h, *_ ) in enumerate(cases)], ["i", "html"]
+        [(i, h) for i, (h, *_ ) in enumerate(cases)], "i int, html string"
     )
     e = extract_html_text(F.col("html"))
     got = {
@@ -3658,6 +3642,12 @@ def test_extract_html_text_edge_cases(spark):
     }
     for i, (_, text, nl, nk) in enumerate(cases):
         assert got[i] == (text, nl, nk), (i, got[i], (text, nl, nk))
+    # the row form returns the Column form's row for every input
+    rows = {
+        r["i"]: (r["text"], r["n_lines"], r["n_kept"])
+        for r in extract_html_text_rows(df, F.col("html"), ["i"]).collect()
+    }
+    assert rows == got
 
 
 def test_strip_markup_conservative(spark):

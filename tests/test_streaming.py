@@ -1091,7 +1091,7 @@ def test_incremental_index_discovery_is_filesystem_api_not_local_os(spark, tmp_p
     uri = "file://" + str(tmp_path / "lsh_index")
     assert not os.path.isdir(uri)  # the old local-FS probe would bail here
     idx = IncrementalMinhashIndex(spark, uri, num_hashes=16, bands=8)
-    assert idx._landed() is None  # never-written path: probed via FS API, clean None
+    assert idx.log.landed() is None  # never-written path: probed via FS API, clean None
 
     b1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
     assert [r["doc_id"] for r in idx.dedup_batch(b1).collect()] == [1]
@@ -1370,12 +1370,12 @@ def test_incremental_index_compact_works_on_file_uri(spark, tmp_path):
     # simulate a foreachBatch replay: the same batch appends its index
     # rows a second time
     idx.dedup_batch(b1).collect()
-    landed = idx._landed()
+    landed = idx.log.landed()
     assert landed.count() > landed.dropDuplicates(["doc_id", "band"]).count()
 
     idx.compact()
 
-    landed = idx._landed()
+    landed = idx.log.landed()
     assert landed.count() == landed.dropDuplicates(["doc_id", "band"]).count()
     b2 = spark.createDataFrame(
         [(10, base.replace("square", "plaza"))], "doc_id long, text string"
@@ -1394,11 +1394,73 @@ def test_incremental_index_uncommitted_temporary_dir_is_no_index(spark, tmp_path
     path = str(tmp_path / "lsh_index")
     os.makedirs(os.path.join(path, "_temporary", "0"))
     idx = IncrementalMinhashIndex(spark, path, num_hashes=16, bands=8)
-    assert idx._landed() is None
+    assert idx.log.landed() is None
     base = "the quick brown fox jumps over the lazy dog while rain falls on the quiet town square"
     b1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
     assert [r["doc_id"] for r in idx.dedup_batch(b1).collect()] == [1]
-    assert idx._landed() is not None  # first real append commits over the debris
+    assert idx.log.landed() is not None  # first real append commits over the debris
+
+
+# Landed parquet layout of every persistent ingest index, as written by
+# one batch: indexes landed by earlier releases must keep reading, so
+# the layout is a compatibility contract, not an implementation detail.
+_INDEX_LAYOUTS = {
+    "IncrementalMinhashIndex": "struct<doc_id:bigint,band:int,bucket:bigint,sh:array<bigint>>",
+    "IncrementalDigestIndex": "struct<doc_id:bigint,_dig:string>",
+    "IncrementalUrlIndex": "struct<doc_id:bigint,_dig:string>",
+    "IncrementalSpanIndex": "struct<_dig:string,_n:bigint,_batch:bigint>",
+    "IncrementalLineIndex": "struct<_grp:string,_dig:bigint,_n:bigint,_batch:bigint>",
+    "IncrementalSubstringIndex": "struct<_g:string,_n:bigint,_batch:bigint>",
+    "IncrementalCmsIndex": "struct<d:int,bucket:bigint,c:bigint,_batch:bigint>",
+    "IncrementalWordCountIndex": "struct<word:string,count:bigint,_batch:bigint>",
+    "IncrementalQidIndex": "struct<zip:string,age:int,n:bigint,_batch:bigint>",
+    "IncrementalIvfIndex": "struct<doc_id:bigint,embedding:array<double>,cell:int>",
+}
+
+
+@pytest.mark.parametrize("name", sorted(_INDEX_LAYOUTS))
+def test_index_landed_layout_is_stable(spark, tmp_path, name):
+    """Each index lands one batch; its parquet schema (column names,
+    order and types) must equal the pinned layout."""
+    from simple_pos_kafka_pyspark_airflow_spark.streaming import ann, corpus
+
+    text = "the quick brown fox jumps over the lazy dog while rain falls on the quiet town"
+    docs = spark.createDataFrame(
+        [
+            (i, f"{text} {i}\nshared footer line here", f"http://a.com/{i}", i % 3,
+             [float(i % 5 + 1), 1.0, 0.5, float(i)], f"z{i % 2}", i % 4)
+            for i in range(6)
+        ],
+        "doc_id long, text string, url string, key long, embedding array<double>, "
+        "zip string, age int",
+    ).withColumn("source", F.lit("s1"))
+    path = str(tmp_path / "idx")
+    land = {
+        "IncrementalMinhashIndex": lambda: corpus.IncrementalMinhashIndex(spark, path)
+        .dedup_batch(docs).count(),
+        "IncrementalDigestIndex": lambda: corpus.IncrementalDigestIndex(spark, path)
+        .dedup_batch(docs).count(),
+        "IncrementalUrlIndex": lambda: corpus.IncrementalUrlIndex(spark, path).record_batch(docs),
+        "IncrementalSpanIndex": lambda: corpus.IncrementalSpanIndex(spark, path)
+        .clean_batch(docs, 0).count(),
+        "IncrementalLineIndex": lambda: corpus.IncrementalLineIndex(spark, path)
+        .clean_batch(docs, 0).count(),
+        "IncrementalSubstringIndex": lambda: corpus.IncrementalSubstringIndex(
+            spark, path, min_len=3
+        ).clean_batch(docs, 0).count(),
+        "IncrementalCmsIndex": lambda: corpus.IncrementalCmsIndex(spark, path).update_batch(docs, 0),
+        "IncrementalWordCountIndex": lambda: corpus.IncrementalWordCountIndex(
+            spark, path
+        ).update_batch(docs, 0),
+        "IncrementalQidIndex": lambda: corpus.IncrementalQidIndex(
+            spark, path, ["zip", "age"]
+        ).update_batch(docs, 0),
+        "IncrementalIvfIndex": lambda: ann.IncrementalIvfIndex(
+            spark, path, n_cells=2, id_col="doc_id"
+        ).ingest_batch(docs),
+    }
+    land[name]()
+    assert spark.read.parquet(path).schema.simpleString() == _INDEX_LAYOUTS[name]
 
 
 def test_scd2_cdc_sink_same_timestamp_second_change_not_dropped(spark, tmp_path):
@@ -1811,7 +1873,7 @@ def test_incremental_ivf_compact_crash_between_staging_and_swap(spark, tmp_path)
     snapshot swap must leave the live index untouched (probes read the old
     rows) and a re-run must converge — the same crash contract the minhash
     index's compact carries."""
-    from simple_pos_kafka_pyspark_airflow_spark.streaming import ann as ann_mod
+    from simple_pos_kafka_pyspark_airflow_spark.sources import io as io_mod
     from simple_pos_kafka_pyspark_airflow_spark.streaming.ann import IncrementalIvfIndex
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(60)
@@ -1824,12 +1886,12 @@ def test_incremental_ivf_compact_crash_between_staging_and_swap(spark, tmp_path)
     want = [(r["vec_id"], r["score"]) for r in idx.probe(q, k=8, nprobe=4).collect()]
     n_dup = spark.read.parquet(path).count()
 
-    real_swap = ann_mod.fs_swap_in
+    real_swap = io_mod.fs_swap_in
 
     def crash_swap(spark_, staging, dest):
         raise RuntimeError("injected crash before swap")
 
-    ann_mod.fs_swap_in = crash_swap
+    io_mod.fs_swap_in = crash_swap
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             idx.compact()
@@ -1839,7 +1901,7 @@ def test_incremental_ivf_compact_crash_between_staging_and_swap(spark, tmp_path)
             (r["vec_id"], r["score"]) for r in idx.probe(q, k=8, nprobe=4).collect()
         ]
     finally:
-        ann_mod.fs_swap_in = real_swap
+        io_mod.fs_swap_in = real_swap
 
     idx.compact()  # re-run converges over the leftover staging dir
     assert spark.read.parquet(path).count() == 120  # 60 ids × n_assign 2
